@@ -27,20 +27,28 @@ next reads it, with a lineage ledger that makes re-runs idempotent:
   check. Partition-scoped refreshes use dynamic partition overwrite and
   touch ONLY the affected ``p_month`` dirs.
 
-Opt-in ``snapshot_tiers`` stores those rollup tiers through
-:class:`rtsa_spark.snapshot.SnapshotStore` instead of a plain partitioned
-dir: every publish/refresh is an append-only snapshot commit, so
-``read_stage(stage, asof=...)`` time-travels to any retained checkpoint,
-refreshes never destroy what an earlier snapshot read, and
-``expire_snapshots`` reclaims history explicitly. Manifest rows for those
-stages carry the committing ``snapshot_id``.
+Every stage lives in one month-partitioned *stage table* with the same
+verbs — publish, month-scoped refresh, month-pruned read, a ``{month:
+dir}`` listing, compaction — in two layouts, so each pipeline step is one
+code path:
 
-This is the parquet-backed emulation of Iceberg snapshot checkpoints
-(SURVEY.md §7 "Iceberg in sandbox"): the lineage row plays the snapshot
-commit, the atomic rename / per-partition swap plays the manifest swap. On
-a real deployment the ``storage`` seam swaps to
-``df.writeTo(...).overwritePartitions()`` on an Iceberg catalog with no
-driver changes.
+- :class:`rtsa_spark.storage.PlainStore` (default): a plain ``p_month=``
+  dir holding only the current state;
+- :class:`rtsa_spark.snapshot.SnapshotStore` for the tiers named in
+  opt-in ``snapshot_tiers`` (and their encoded-block stages): every
+  publish/refresh is an append-only snapshot commit, so
+  ``read_stage(stage, asof=...)`` time-travels to any retained
+  checkpoint, refreshes never destroy what an earlier snapshot read, and
+  ``expire_snapshots`` reclaims history explicitly.  Manifest rows for
+  those stages carry the committing ``snapshot_id``.
+
+Only the snapshot-only verbs (time travel, changelog reads, tags and
+branches, expiry) ask which layout a stage has.  This is the
+parquet-backed emulation of Iceberg snapshot checkpoints (SURVEY.md §7
+"Iceberg in sandbox"): the lineage row plays the snapshot commit, the
+atomic rename / per-partition swap plays the manifest swap. On a real
+deployment the stage table swaps to ``df.writeTo(...).overwritePartitions()``
+on an Iceberg catalog with no driver changes.
 
 The reference's analog is the per-function result-stack sink (S4 stacks,
 ``/root/reference/R/rtsa.stl.R:441-489``) — except rtsa recomputes
@@ -65,9 +73,7 @@ from rtsa_spark.operators.gapfill import gapfill_linear
 from rtsa_spark.operators.metrics import compute_metrics
 from rtsa_spark.operators.rollup import TIER_ORDER, rollup_next, rollup_raw
 from rtsa_spark.snapshot import SnapshotStore
-from rtsa_spark.storage import cluster_for_publish
-
-P_MONTH = "p_month"
+from rtsa_spark.storage import PlainStore, parquet_stats
 
 
 def _parse_ts(x):
@@ -181,10 +187,10 @@ class TierPipeline:
         #: snapshot commit, so consumers can time-travel
         #: (``read_stage(stage, asof=...)``) and refreshes never destroy
         #: what an earlier checkpoint read. Downstream stages (gapfill /
-        #: encode / metrics) read the CURRENT snapshot and keep their
-        #: plain layout.
+        #: metrics / hist) read the CURRENT snapshot and keep the plain
+        #: layout; a tier's encoded-block stage follows the tier.
         self.snapshot_tiers = snapshot_tiers
-        self._stores: dict[str, SnapshotStore] = {}
+        self._stores: dict[str, SnapshotStore | PlainStore] = {}
         self.run_id = run_id or uuid.uuid4().hex[:12]
         os.makedirs(self.base, exist_ok=True)
 
@@ -208,44 +214,27 @@ class TierPipeline:
         return os.path.join(self.base, "partition_lineage.jsonl")
 
     def _append_partition_rows(
-        self, stage: str, path: str, status: str, months: list[str] | None = None
-    ) -> int:
+        self, stage: str, status: str, months: list[str] | None = None
+    ) -> tuple[int, int]:
         """Append one lineage row PER month partition of a published stage
         (the parquet emulation of an Iceberg snapshot's per-partition
         manifest entries): ``{run_id, stage, p_month, rows, n_files,
-        bytes, status, finished_at}``. ``months`` restricts accounting to
-        the refreshed partitions (partition-pruned scan). Non-partitioned
-        stages get a single row with ``p_month=None``. Returns the total
-        row count across the accounted partitions, so the caller's stage
-        row needs no second count job."""
-        df = self.spark.read.parquet(path)
-        partitioned = P_MONTH in df.columns
-        if partitioned:
-            if months is not None:
-                df = df.where(F.col(P_MONTH).isin(months))
-            counts = {
-                r[P_MONTH]: r["n"]
-                for r in df.groupBy(P_MONTH).agg(
-                    F.count(F.lit(1)).alias("n")
-                ).collect()
-            }
-            # a refreshed month the recomputation emptied out was DELETED —
-            # record it as a rows=0 manifest row, not a silent omission
-            if months is not None:
-                for m in months:
-                    counts.setdefault(m, 0)
-        else:
-            counts = {None: df.count()}
+        bytes, status, [snapshot_id,] finished_at}``, figures read from
+        the partition's parquet footers (no Spark job).  ``months``
+        restricts accounting to the refreshed partitions; a requested
+        month with no dir was DELETED and records ``rows=0`` instead of a
+        silent omission.  Unpartitioned stages get a single row with
+        ``p_month=None``.  Returns ``(rows, files)`` totals across the
+        accounted partitions, so the caller's stage row needs no second
+        count job."""
+        dirs = self._store(stage).month_dirs()
+        if months is not None:
+            dirs = {m: dirs.get(m) for m in months}
+        sid = self._snapshot_field(stage)
         now = time.time()
-        total = 0
-        for month, rows in sorted(counts.items(), key=lambda kv: str(kv[0])):
-            pdir = path if month is None else os.path.join(path, f"{P_MONTH}={month}")
-            n_files = n_bytes = 0
-            for root, _dirs, files in os.walk(pdir):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(root, fname))
+        total_rows = total_files = 0
+        for month, d in sorted(dirs.items(), key=lambda kv: str(kv[0])):
+            rows, n_files, n_bytes = parquet_stats(d)
             self._append_ledger_row(
                 self._partition_ledger_path,
                 {
@@ -256,66 +245,19 @@ class TierPipeline:
                     "n_files": n_files,
                     "bytes": n_bytes,
                     "status": status,
+                    **sid,
                     "finished_at": now,
                 },
             )
-            total += rows
-        return total
+            total_rows += rows
+            total_files += n_files
+        return total_rows, total_files
 
-    def _append_partition_rows_snap(
-        self,
-        stage: str,
-        store: SnapshotStore,
-        status: str,
-        months: list[str] | None = None,
-    ) -> int:
-        """Snapshot-stage twin of :meth:`_append_partition_rows`: manifest
-        rows account the CURRENT snapshot's mapped version dirs (one row
-        per month; a refreshed month the commit deleted gets rows=0).
-        Returns total rows across the accounted months."""
-        sid = store.current_snapshot()
-        mapping = store.months()
-        df = store.read().select(
-            F.date_format(F.col(store.ts_col), "yyyy-MM").alias("m")
-        )
-        if months is not None:
-            df = df.where(F.col("m").isin(months))
-        counts = {
-            r["m"]: r["n"]
-            for r in df.groupBy("m").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        if months is not None:
-            for m in months:
-                counts.setdefault(m, 0)
-        now = time.time()
-        total = 0
-        for month, rows in sorted(counts.items()):
-            n_files = n_bytes = 0
-            if month in mapping:
-                vdir = os.path.join(
-                    store._data_dir, f"{P_MONTH}={month}", f"v={mapping[month]}"
-                )
-                for root, _dirs, files in os.walk(vdir):
-                    for fname in files:
-                        if fname.endswith(".parquet"):
-                            n_files += 1
-                            n_bytes += os.path.getsize(os.path.join(root, fname))
-            self._append_ledger_row(
-                self._partition_ledger_path,
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "p_month": month,
-                    "rows": rows,
-                    "n_files": n_files,
-                    "bytes": n_bytes,
-                    "status": status,
-                    "snapshot_id": sid,
-                    "finished_at": now,
-                },
-            )
-            total += rows
-        return total
+    def _snapshot_field(self, stage: str) -> dict:
+        """``{"snapshot_id": id}`` for a snapshot-backed stage's ledger
+        rows, ``{}`` for a plain one."""
+        sid = self._store(stage).current_snapshot()
+        return {} if sid is None else {"snapshot_id": sid}
 
     @staticmethod
     def _append_ledger_row(ledger_path: str, row: dict) -> None:
@@ -380,38 +322,29 @@ class TierPipeline:
             and stage[len("encoded_"):] in self.snapshot_tiers
         )
 
-    def _store(self, stage: str) -> SnapshotStore:
+    def _store(self, stage: str) -> SnapshotStore | PlainStore:
+        """The stage's table — the one place that picks the layout.
+        Month partitioning keys on ``block_day`` for encoded-block stages
+        (blocks are calendar-month groups, so they stay refresh-able) and
+        on ``bucket_start`` otherwise; frames without it (metrics) land
+        unpartitioned."""
         if stage not in self._stores:
+            path = self._stage_path(stage)
             ts_col = (
                 "block_day" if stage.startswith("encoded_") else "bucket_start"
             )
-            self._stores[stage] = SnapshotStore(
-                self.spark, self._stage_path(stage), ts_col=ts_col
+            self._stores[stage] = (
+                SnapshotStore(self.spark, path, ts_col=ts_col)
+                if self._is_snapshot_stage(stage)
+                else PlainStore(self.spark, path, ts_col=ts_col, run_id=self.run_id)
             )
         return self._stores[stage]
 
     def _stage_exists(self, stage: str) -> bool:
-        if self._is_snapshot_stage(stage):
-            return self._store(stage).current_snapshot() is not None
-        return os.path.exists(self._stage_path(stage))
-
-    def _read_stage(self, stage: str) -> DataFrame:
-        if self._is_snapshot_stage(stage):
-            return self._store(stage).read()
-        df = self.spark.read.parquet(self._stage_path(stage))
-        return df.drop(P_MONTH) if P_MONTH in df.columns else df
-
-    def _read_stage_months(self, stage: str, months: list[str]) -> DataFrame:
-        """Month-filtered stage read: partition-pruned on ``p_month`` for
-        plain stages; snapshot stages restrict the manifest listing to the
-        requested months (pruned at the dir level, not post-hoc)."""
-        if self._is_snapshot_stage(stage):
-            return self._store(stage).read(months=months)
-        return (
-            self.spark.read.parquet(self._stage_path(stage))
-            .where(F.col(P_MONTH).isin(months))
-            .drop(P_MONTH)
-        )
+        # the listing, not os.path.exists: a snapshot-backed stage's dir
+        # exists as soon as its store object is built, with no committed
+        # snapshot behind it
+        return bool(self._store(stage).month_dirs())
 
     def read_stage(
         self,
@@ -434,7 +367,8 @@ class TierPipeline:
         ``p_month`` range — directory-level partition pruning on plain
         stages, manifest-level dir listing on snapshot stages — and the
         row predicates land on the parquet scan, where the
-        range-clustered sorted publish (:func:`cluster_for_publish`)
+        range-clustered sorted publish
+        (:func:`rtsa_spark.storage.cluster_for_publish`)
         makes the row-group min/max envelopes tight.  Encoded-block
         stages prune on the block ``[bucket_lo, bucket_hi]`` envelope
         (decode of surviving blocks is the caller's step — see
@@ -449,23 +383,15 @@ class TierPipeline:
             if end is not None
             else None
         )
-        if self._is_snapshot_stage(stage):
-            df = self._store(stage).read(
-                asof=asof, month_lo=m_lo, month_hi=m_hi, asof_ts=asof_ts
-            )
-        else:
-            if asof is not None or asof_ts is not None:
+        travel = {}
+        if asof is not None or asof_ts is not None:
+            if not self._is_snapshot_stage(stage):
                 raise ValueError(
                     f"stage {stage!r} is not snapshot-backed; add its tier "
                     f"to snapshot_tiers for time travel"
                 )
-            df = self.spark.read.parquet(self._stage_path(stage))
-            if P_MONTH in df.columns:
-                if m_lo is not None:
-                    df = df.where(F.col(P_MONTH) >= m_lo)
-                if m_hi is not None:
-                    df = df.where(F.col(P_MONTH) <= m_hi)
-                df = df.drop(P_MONTH)
+            travel = {"asof": asof, "asof_ts": asof_ts}
+        df = self._store(stage).read(month_lo=m_lo, month_hi=m_hi, **travel)
         if start is not None or end is not None:
             if "bucket_start" in df.columns:
                 if start is not None:
@@ -588,87 +514,17 @@ class TierPipeline:
         ]
         return {s: self._store(s).expire(keep_last) for s in stages}
 
-    @staticmethod
-    def _with_month(df: DataFrame, ts_col: str = "bucket_start") -> DataFrame:
-        return df.withColumn(
-            P_MONTH, F.date_format(F.col(ts_col), "yyyy-MM")
-        )
-
     def _write_stage(self, stage: str, df: DataFrame, fingerprint: str) -> str:
-        """Compute + atomically publish one stage, ledger-logged.
-        Bucket-bearing stages are written partitionBy(month) so late-data
-        refreshes can swap single partition dirs. Snapshot-backed stages
-        publish through their store instead: append-only version dirs +
-        snapshot-log commit play the tmp-write + atomic rename (a crash
-        between data write and log append leaves an orphan no read sees,
-        reaped by expire)."""
-        final = self._stage_path(stage)
-        if self._is_snapshot_stage(stage):
-            st = self._store(stage)
-            t0 = time.time()
-            st.publish(df)
-            rows_out = self._append_partition_rows_snap(stage, st, "SUCCESS")
-            mapping = st.months()
-            n_files = sum(
-                1
-                for m, v in mapping.items()
-                for _root, _dirs, files in os.walk(
-                    os.path.join(st._data_dir, f"{P_MONTH}={m}", f"v={v}")
-                )
-                for f in files
-                if f.endswith(".parquet")
-            )
-            rows_in = (
-                int(fingerprint.split(":")[0]) if ":" in fingerprint else None
-            )
-            self._append_ledger(
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "n_files": n_files,
-                    "started_at": t0,
-                    "finished_at": time.time(),
-                    "status": "SUCCESS",
-                    "fingerprint": fingerprint,
-                    "snapshot_id": st.current_snapshot(),
-                }
-            )
-            return final
-        tmp = final + f"._tmp_{self.run_id}"
+        """Compute + atomically publish one stage through its table,
+        ledger-logged.  Plain stages write a ``_tmp`` dir and rename it
+        in; snapshot-backed stages append version dirs and commit to the
+        snapshot log (a crash between data write and log append leaves
+        an orphan no read sees, reaped by expire).  Month partitioning is
+        what lets late-data refreshes swap single partitions."""
         t0 = time.time()
-        writer = df.write.mode("overwrite")
-        if "bucket_start" in df.columns:
-            writer = (
-                cluster_for_publish(
-                    self._with_month(df), ("source", "bucket_start")
-                )
-                .write.mode("overwrite")
-                .partitionBy(P_MONTH)
-            )
-        elif "block_day" in df.columns:
-            # encoded-block stages: blocks are calendar-month groups, so
-            # month partitioning keys on block_day and stays refresh-able
-            writer = (
-                cluster_for_publish(
-                    self._with_month(df, "block_day"), ("source", "block_day")
-                )
-                .write.mode("overwrite")
-                .partitionBy(P_MONTH)
-            )
-        writer.parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        self._store(stage).publish(df)
         # per-partition manifest rows double as the stage row count
-        rows_out = self._append_partition_rows(stage, final, "SUCCESS")
-        n_files = sum(
-            1
-            for _root, _dirs, files in os.walk(final)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        rows_out, n_files = self._append_partition_rows(stage, "SUCCESS")
         rows_in = int(fingerprint.split(":")[0]) if ":" in fingerprint else None
         self._append_ledger(
             {
@@ -681,9 +537,51 @@ class TierPipeline:
                 "finished_at": time.time(),
                 "status": "SUCCESS",
                 "fingerprint": fingerprint,
+                **self._snapshot_field(stage),
             }
         )
-        return final
+        return self._stage_path(stage)
+
+    def _refresh_stage(
+        self,
+        stage: str,
+        df: DataFrame,
+        months: list[str],
+        fingerprint: str,
+        count_input: bool = False,
+    ) -> int | None:
+        """Month-scoped refresh of one published stage through its table,
+        with REFRESH manifest rows and a ledger row whose ``rows_out``
+        counts only the refreshed months.  ``count_input`` persists the
+        recomputed frame and records its row count as ``rows_in`` (the
+        frame feeds the count, the write and the plain table's
+        distinct-months probe, so the aggregation DAG runs once); returns
+        that count."""
+        t0 = time.time()
+        rows_in = None
+        if count_input:
+            df = df.persist()
+            rows_in = df.count()
+        self._store(stage).refresh_months(df, months)
+        if count_input:
+            df.unpersist()
+        rows_out, _ = self._append_partition_rows(stage, "REFRESH", months=months)
+        self._append_ledger(
+            {
+                "run_id": self.run_id,
+                "stage": stage,
+                "rows_in": rows_in,
+                "rows_out": rows_out,
+                "n_files": None,
+                "started_at": t0,
+                "finished_at": time.time(),
+                "status": "REFRESH",
+                "fingerprint": fingerprint,
+                "months": months,
+                **self._snapshot_field(stage),
+            }
+        )
+        return rows_in
 
     def run(self, sequences: DataFrame, fail_after: str | None = None) -> dict[str, str]:
         """Execute the ladder; returns {stage: path}. ``fail_after`` injects
@@ -708,16 +606,14 @@ class TierPipeline:
         for tier in self.tiers:
             stage = f"rollup_{tier}"
             path = self._stage_path(stage)
-            if self._completed(stage, prev_fp) and self._stage_exists(stage):
-                tier_df = self._read_stage(stage)
-            else:
+            if not (self._completed(stage, prev_fp) and self._stage_exists(stage)):
                 computed = (
                     rollup_raw(sequences)
                     if tier == "raw"
                     else rollup_next(prev_df, tier)
                 )
                 self._write_stage(stage, computed, prev_fp)
-                tier_df = self._read_stage(stage)
+            tier_df = self._store(stage).read()
             out[stage] = path
             if fail_after == stage:
                 raise RuntimeError(f"injected failure after {stage}")
@@ -728,7 +624,9 @@ class TierPipeline:
             if tier in self.gapfill_tiers:
                 gstage = f"gapfilled_{tier}"
                 gpath = self._stage_path(gstage)
-                if not (self._completed(gstage, tier_fp) and os.path.exists(gpath)):
+                if not (
+                    self._completed(gstage, tier_fp) and self._stage_exists(gstage)
+                ):
                     self._write_stage(gstage, gapfill_linear(tier_df, tier), tier_fp)
                 out[gstage] = gpath
                 if fail_after == gstage:
@@ -737,9 +635,6 @@ class TierPipeline:
             if tier in self.encode_tiers:
                 estage = f"encoded_{tier}"
                 epath = self._stage_path(estage)
-                # _stage_exists, not os.path.exists: a snapshot-backed
-                # stage's dir exists as soon as its store object is built,
-                # with no committed snapshot behind it
                 if not (
                     self._completed(estage, tier_fp)
                     and self._stage_exists(estage)
@@ -754,39 +649,23 @@ class TierPipeline:
                     raise RuntimeError(f"injected failure after {estage}")
 
             if tier in self.hist_tiers:
-                from rtsa_spark.operators.rollup import (
-                    merge_token_histograms,
-                    token_histogram,
-                )
-
                 hstage = f"hist_{tier}"
-                hpath = self._stage_path(hstage)
-                if not (self._completed(hstage, seq_fp) and os.path.exists(hpath)):
-                    # first hist tier computes from raw sequences; coarser
-                    # hist tiers cascade by map-sum merge of the previous one
-                    finer = next(
-                        (f"hist_{t}" for t in reversed(self.tiers[: self.tiers.index(tier)])
-                         if t in self.hist_tiers),
-                        None,
-                    )
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        hist = merge_token_histograms(self._read_stage(finer), tier)
-                    else:
-                        hist = token_histogram(
-                            sequences, tier, top_k=self.hist_top_k
-                        )
-                    self._write_stage(hstage, hist, seq_fp)
-                out[hstage] = hpath
+                if not (
+                    self._completed(hstage, seq_fp) and self._stage_exists(hstage)
+                ):
+                    self._write_stage(hstage, self._hist(tier, sequences), seq_fp)
+                out[hstage] = self._stage_path(hstage)
 
             if tier in self.metrics_tiers:
                 mstage = f"metrics_{tier}"
-                mpath = self._stage_path(mstage)
                 src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
-                mdf = self._read_stage(src)
+                mdf = self._store(src).read()
                 m_fp = content_fingerprint(mdf)
-                if not (self._completed(mstage, m_fp) and os.path.exists(mpath)):
+                if not (
+                    self._completed(mstage, m_fp) and self._stage_exists(mstage)
+                ):
                     self._write_stage(mstage, compute_metrics(mdf, tier), m_fp)
-                out[mstage] = mpath
+                out[mstage] = self._stage_path(mstage)
 
             prev_df = tier_df
             prev_fp = tier_fp
@@ -796,6 +675,32 @@ class TierPipeline:
         # rebuilt (idempotent), never misses one
         self._write_input_months(seq_months)
         return out
+
+    def _hist(
+        self, tier: str, sequences: DataFrame, months: list[str] | None = None
+    ) -> DataFrame:
+        """Token histograms of ``tier`` (of ``months`` only, when given):
+        the first hist tier computes from raw ``sequences`` with top_k;
+        coarser hist tiers cascade by map-sum merge of the published finer
+        one — a direct rebuild would change top-k truncation semantics."""
+        from rtsa_spark.operators.rollup import (
+            merge_token_histograms,
+            token_histogram,
+        )
+
+        finer = next(
+            (
+                f"hist_{t}"
+                for t in reversed(self.tiers[: self.tiers.index(tier)])
+                if t in self.hist_tiers
+            ),
+            None,
+        )
+        if finer and self._stage_exists(finer):
+            return merge_token_histograms(
+                self._store(finer).read(months=months), tier
+            )
+        return token_histogram(sequences, tier, top_k=self.hist_top_k)
 
     def lineage(self) -> DataFrame:
         """Ledger as a DataFrame (the `lineage` table of SURVEY.md §7.0)."""
@@ -896,7 +801,7 @@ class TierPipeline:
         """
         replaced: dict[str, int] = {}
         # Partition-scoped overwrite presupposes a prior full publish: a
-        # missing tier dir would make _overwrite_months create a dir holding
+        # missing tier dir would make a month refresh create a dir holding
         # ONLY the refreshed months while the ledger records the full-input
         # fingerprint, so run() would skip the rebuild forever. Fail loudly
         # instead (derived encode/hist stages fall back to a full build
@@ -914,7 +819,6 @@ class TierPipeline:
         affected_seq = sequences.where(
             F.date_format(F.col("ts"), "yyyy-MM").isin(months)
         )
-        in_months = F.col(P_MONTH).isin(months)
         prev_recomputed: DataFrame | None = None
         seq_months = month_fingerprints(sequences)
         if not seq_months:
@@ -945,160 +849,35 @@ class TierPipeline:
             truthful_fp = seq_fp  # pre-month-map table: best available
         prev_fp = truthful_fp
 
-        def _overwrite_months(
-            df: DataFrame, path: str, ts_col: str = "bucket_start"
-        ) -> None:
-            """Dynamic partition overwrite of the affected months, PLUS
-            explicit removal of any requested month the recomputation
-            produced no rows for — dynamic mode only touches partitions
-            present in the frame, so a fully-deleted month would otherwise
-            survive as a stale partition dir forever."""
-            # defensive scope to the requested months (same rail as
-            # SnapshotStore.refresh_months): a recomputed frame must never
-            # overwrite a neighbor month's partition with partial content
-            with_m = self._with_month(df, ts_col).where(
-                F.col(P_MONTH).isin(months)
-            )
-            written = {
-                r[P_MONTH] for r in with_m.select(P_MONTH).distinct().collect()
-            }
-            existing = {
-                d.split("=", 1)[1]
-                for d in os.listdir(path)
-                if d.startswith(f"{P_MONTH}=")
-            }
-            if not written and not (existing - set(months)):
-                # this refresh would delete every month dir the stage has
-                # and write nothing back — a stage with zero partitions is
-                # unreadable (no schema) and certainly an upstream accident
-                raise ValueError(
-                    f"refresh of {sorted(months)} would empty {path} "
-                    f"entirely; remove the base dir explicitly to tear "
-                    f"the table down"
-                )
-            (
-                cluster_for_publish(with_m, ("source", ts_col))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(P_MONTH)
-                .parquet(path)
-            )
-            for m in set(months) - written:
-                stale = os.path.join(path, f"{P_MONTH}={m}")
-                if os.path.exists(stale):
-                    shutil.rmtree(stale)
-
         for tier in self.tiers:
             stage = f"rollup_{tier}"
-            path = self._stage_path(stage)
             recomputed = (
                 rollup_raw(affected_seq)
                 if tier == "raw"
                 else rollup_next(prev_recomputed, tier)
             )
-            t0 = time.time()
-            # the recomputed plan is consumed by the count, the write, and
-            # (plain path) the distinct-months probe — persist once so the
-            # aggregation DAG runs once, not three times
-            recomputed = recomputed.persist()
-            n_new = recomputed.count()
-            if self._is_snapshot_stage(stage):
-                st = self._store(stage)
-                st.refresh_months(recomputed, months)
-                # manifest append returns the month-scoped row total —
-                # no whole-table count on a month-scoped refresh
-                rows_out = self._append_partition_rows_snap(
-                    stage, st, "REFRESH", months=months
-                )
-                snap_extra = {"snapshot_id": st.current_snapshot()}
-            else:
-                _overwrite_months(recomputed, path)
-                rows_out = self._append_partition_rows(
-                    stage, path, "REFRESH", months=months
-                )
-                snap_extra = {}
-            recomputed.unpersist()
-            self._append_ledger(
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "rows_in": n_new,
-                    "rows_out": rows_out,
-                    "n_files": None,
-                    "started_at": t0,
-                    "finished_at": time.time(),
-                    "status": "REFRESH",
-                    "fingerprint": prev_fp,
-                    "months": months,
-                    **snap_extra,
-                }
+            replaced[stage] = self._refresh_stage(
+                stage, recomputed, months, prev_fp, count_input=True
             )
-            replaced[stage] = n_new
 
             if tier in self.hist_tiers:
-                from rtsa_spark.operators.rollup import (
-                    merge_token_histograms,
-                    token_histogram,
-                )
-
                 hstage = f"hist_{tier}"
-                hpath = self._stage_path(hstage)
-                # mirror run()'s construction exactly: first hist tier from
-                # raw tokens with top_k; coarser hist tiers cascade by
-                # merging the (already refreshed) finer tier's month rows —
-                # a direct rebuild would change top-k truncation semantics
-                # for refreshed months only
-                finer = next(
-                    (f"hist_{t}" for t in reversed(self.tiers[: self.tiers.index(tier)])
-                     if t in self.hist_tiers),
-                    None,
-                )
-                if not os.path.exists(hpath):
+                if not self._stage_exists(hstage):
                     # hist enabled after the original run(): a partial
                     # publish under seq_fp would hide every other month from
                     # run() — build the whole stage instead (same fallback
                     # as the encoded stage below).
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        hist = merge_token_histograms(self._read_stage(finer), tier)
-                    else:
-                        hist = token_histogram(
-                            sequences, tier, top_k=self.hist_top_k
-                        )
-                    self._write_stage(hstage, hist, seq_fp)
+                    self._write_stage(hstage, self._hist(tier, sequences), seq_fp)
                 else:
-                    t_h = time.time()
-                    if finer and os.path.exists(self._stage_path(finer)):
-                        finer_months = (
-                            self.spark.read.parquet(self._stage_path(finer))
-                            .where(in_months)
-                            .drop(P_MONTH)
-                        )
-                        hist = merge_token_histograms(finer_months, tier)
-                    else:
-                        hist = token_histogram(
-                            affected_seq, tier, top_k=self.hist_top_k
-                        )
-                    _overwrite_months(hist, hpath)
-                    h_rows = self._append_partition_rows(
-                        hstage, hpath, "REFRESH", months=months
-                    )
-                    self._append_ledger(
-                        {
-                            "run_id": self.run_id,
-                            "stage": hstage,
-                            "rows_in": None,
-                            "rows_out": h_rows,
-                            "n_files": None,
-                            "started_at": t_h,
-                            "finished_at": time.time(),
-                            "status": "REFRESH",
-                            "fingerprint": truthful_fp,
-                            "months": months,
-                        }
+                    self._refresh_stage(
+                        hstage,
+                        self._hist(tier, affected_seq, months),
+                        months,
+                        truthful_fp,
                     )
                 replaced[hstage] = -1  # partition-scoped; rows tracked above
 
-            tier_df = self._read_stage(stage)
+            tier_df = self._store(stage).read()
             tier_fp = content_fingerprint(tier_df)
             if tier in self.gapfill_tiers:
                 gstage = f"gapfilled_{tier}"
@@ -1107,13 +886,12 @@ class TierPipeline:
             if tier in self.encode_tiers:
                 # blocks are month-scoped by construction, so the encoded
                 # stage refreshes partition-scoped like the tiers: re-encode
-                # only the affected months' tier rows and swap those dirs.
-                # If the stage dir doesn't exist (encoding enabled after the
+                # only the affected months' tier rows and swap those months.
+                # If the stage doesn't exist (encoding enabled after the
                 # original run()), a partial publish under the full-tier
                 # fingerprint would permanently hide every other month from
                 # run() — build the whole stage instead.
                 estage = f"encoded_{tier}"
-                epath = self._stage_path(estage)
                 if not self._stage_exists(estage):
                     self._write_stage(
                         estage,
@@ -1121,49 +899,22 @@ class TierPipeline:
                         tier_fp,
                     )
                 else:
-                    t1 = time.time()
                     month_blocks = encode_tier(
-                        self._read_stage_months(stage, months),
+                        self._store(stage).read(months=months),
                         value_col=self.encode_value_col,
                     )
-                    if self._is_snapshot_stage(estage):
-                        est = self._store(estage)
-                        est.refresh_months(month_blocks, months)
-                        self._append_partition_rows_snap(
-                            estage, est, "REFRESH", months=months
-                        )
-                    else:
-                        _overwrite_months(
-                            month_blocks, epath, ts_col="block_day"
-                        )
-                        self._append_partition_rows(
-                            estage, epath, "REFRESH", months=months
-                        )
-                    self._append_ledger(
-                        {
-                            "run_id": self.run_id,
-                            "stage": estage,
-                            "rows_in": None,
-                            "rows_out": self._read_stage(estage).count(),
-                            "n_files": None,
-                            "started_at": t1,
-                            "finished_at": time.time(),
-                            "status": "REFRESH",
-                            "fingerprint": tier_fp,
-                            "months": months,
-                        }
-                    )
+                    self._refresh_stage(estage, month_blocks, months, tier_fp)
                 replaced[estage] = -1  # partition-scoped; rows tracked above
             if tier in self.metrics_tiers:
                 mstage = f"metrics_{tier}"
                 src = f"gapfilled_{tier}" if tier in self.gapfill_tiers else stage
-                mdf = self._read_stage(src)
+                mdf = self._store(src).read()
                 self._write_stage(
                     mstage, compute_metrics(mdf, tier), content_fingerprint(mdf)
                 )
                 replaced[mstage] = 0
 
-            prev_recomputed = self._read_stage_months(stage, months)
+            prev_recomputed = self._store(stage).read(months=months)
             prev_fp = tier_fp
         # Update ONLY the refreshed months' entries in the published month
         # map (not the whole new map): if the caller named a subset of the
@@ -1188,206 +939,36 @@ class TierPipeline:
         """Execute the small-file compaction plan for a published stage —
         the engine-owned half of Iceberg's ``rewrite_data_files`` that
         :func:`operators.retention.plan_compaction` deliberately leaves to
-        the table owner.  Per month partition: sub-``target_rows`` files
-        are grouped by the plan, each group with >=2 files is rewritten as
-        ONE file re-sorted on ``(source, time)`` (preserving the
-        :func:`rtsa_spark.storage.cluster_for_publish` row-group-stats
-        invariant), untouched files are hard-linked, and the month dir is
-        swapped atomically — a reader never sees a half-compacted
-        partition, and a crash mid-rebuild leaves the live dir intact.
+        the table owner — through the stage's table:
+        :meth:`rtsa_spark.storage.PlainStore.compact` rewrites each month's
+        small-file groups as one file re-sorted on ``(source, time)`` and
+        swaps the month dir atomically (a reader never sees a
+        half-compacted partition); :meth:`rtsa_spark.snapshot.SnapshotStore.compact`
+        commits a layout-only rewrite through the snapshot log, so time
+        travel stays intact (``target_rows`` is ignored there: the trigger
+        is >=2 files in a month's current version dir).
 
-        Content is bit-identical by construction (same rows, same
-        schema), so stage fingerprints, resume skips, and late-data month
-        maps are all unaffected; only the physical layout changes.  Each
+        Content is bit-identical by construction, so stage fingerprints,
+        resume skips, and late-data month maps are all unaffected.  Each
         compacted month appends a ``COMPACT`` row to the partition
         manifest (rows unchanged, n_files/bytes shrink) — the operation
-        is auditable, never silent.  Single-file groups are skipped, so
-        re-running is a no-op (idempotent).
-
-        Snapshot-backed stages route through the snapshot log instead of
-        touching files (their version dirs are immutable):
-        :meth:`rtsa_spark.snapshot.SnapshotStore.rewrite` for a whole-
-        table compaction, or a month-scoped layout-only
-        ``refresh_months`` when ``months`` is given.  Either way time
-        travel stays intact and ``expire_snapshots`` later reclaims the
-        fragmented versions.  ``target_rows`` is ignored on this path —
-        a snapshot rewrite always re-clusters the whole month, so the
-        trigger is simply >=2 parquet files in a month's current version
-        dir (which also keeps re-running a no-op).
+        is auditable, never silent.  Re-running is a no-op (idempotent).
 
         Returns ``{month: {"files_before": .., "files_after": ..,
         "groups": ..}}`` for the months that actually changed.
         """
-        from rtsa_spark.operators.retention import file_stats, plan_compaction
-
-        if self._is_snapshot_stage(stage):
-            return self._compact_snapshot_stage(stage, months)
-        path = self._stage_path(stage)
-        month_dirs = sorted(
-            d for d in os.listdir(path) if d.startswith(f"{P_MONTH}=")
-        )
-        if not month_dirs:
-            raise ValueError(
-                f"stage {stage!r} is not month-partitioned; compaction "
-                f"operates per partition"
-            )
-        want = set(months) if months is not None else None
-        out: dict[str, dict] = {}
-        for d in month_dirs:
-            m = d.split("=", 1)[1]
-            if want is not None and m not in want:
-                continue
-            mpath = os.path.join(path, d)
-            df = self.spark.read.parquet(mpath)
-            ts_col = "bucket_start" if "bucket_start" in df.columns else (
-                "block_day" if "block_day" in df.columns else None
-            )
-            if ts_col is None:
-                raise ValueError(f"stage {stage!r} has no time column")
-            plan = plan_compaction(file_stats(df, ts_col), target_rows)
-            groups: dict[int, list[str]] = {}
-            for r in plan.collect():  # file-count sized, never data
-                groups.setdefault(r["group"], []).append(r["file"])
-            # rewriting a lone small file gains nothing and would make
-            # compaction re-trigger forever; >=2-file groups only
-            groups = {g: fs for g, fs in groups.items() if len(fs) >= 2}
-            if not groups:
-                continue
-            order = [c for c in ("source", ts_col) if c in df.columns]
-
-            def to_local(f: str) -> str:
-                # input_file_name() yields URIs ("file:///x", sometimes
-                # "file:/x"); os.walk yields plain paths. A mismatch here
-                # would treat a grouped file as untouched AND rewrite it —
-                # duplicated rows — so parse, never strip a fixed prefix.
-                from urllib.parse import unquote, urlparse
-
-                parsed = urlparse(f)
-                return unquote(parsed.path) if parsed.scheme else f
-
-            grouped_files = {
-                to_local(f) for fs in groups.values() for f in fs
-            }
-            n_grouped = sum(len(fs) for fs in groups.values())
-            if len(grouped_files) != n_grouped or not all(
-                os.path.exists(f) for f in grouped_files
-            ):
-                raise RuntimeError(
-                    f"file-URI normalization mismatch in {mpath}: plan "
-                    f"names {n_grouped} files, {len(grouped_files)} "
-                    f"resolved locally — refusing to compact"
-                )
-            tmp = mpath + f"._compact_{self.run_id}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp)
-            files_before = 0
-            for root, _dirs, files in os.walk(mpath):
-                for fname in files:
-                    if not fname.endswith(".parquet"):
-                        continue
-                    files_before += 1
-                    src = os.path.join(root, fname)
-                    if src not in grouped_files:
-                        os.link(src, os.path.join(tmp, fname))
-            for g, fs in sorted(groups.items()):
-                gtmp = tmp + f".g{g}"
-                (
-                    self.spark.read.parquet(*fs)
-                    .coalesce(1)
-                    .sortWithinPartitions(*order)
-                    .write.mode("overwrite")
-                    .parquet(gtmp)
-                )
-                parts = [
-                    f for f in os.listdir(gtmp) if f.endswith(".parquet")
-                ]
-                for i, f in enumerate(parts):
-                    os.rename(
-                        os.path.join(gtmp, f),
-                        os.path.join(
-                            tmp, f"compacted-g{g}-{i}-{self.run_id}.parquet"
-                        ),
-                    )
-                shutil.rmtree(gtmp)
-            old = mpath + f"._old_{self.run_id}"
-            os.rename(mpath, old)
-            os.rename(tmp, mpath)
-            shutil.rmtree(old)
-            self._append_partition_rows(stage, path, "COMPACT", months=[m])
-            files_after = sum(
-                1
-                for _root, _dirs, files in os.walk(mpath)
-                for f in files
-                if f.endswith(".parquet")
-            )
-            out[m] = {
-                "files_before": files_before,
-                "files_after": files_after,
-                "groups": len(groups),
-            }
-        return out
-
-    def _compact_snapshot_stage(
-        self, stage: str, months: list[str] | None
-    ) -> dict[str, dict]:
-        """Snapshot twin of :meth:`compact_stage`: never touches version
-        dirs in place.  Whole-table → :meth:`SnapshotStore.rewrite` (all
-        months land on ONE fresh clustered version, ``op="rewrite"``);
-        month-scoped → a layout-only ``refresh_months`` re-publishing the
-        CURRENT content of just the fragmented requested months (other
-        months keep their versions).  Content is bit-identical either
-        way; a COMPACT manifest row is appended per accounted month, and
-        months already at <=1 file are skipped so re-running is a no-op
-        (no empty snapshot commits)."""
         store = self._store(stage)
-        mapping = store.months()
-
-        def n_files(month: str, mp: dict[str, str]) -> int:
-            vdir = os.path.join(
-                store._data_dir, f"{P_MONTH}={month}", f"v={mp[month]}"
+        before = store.month_dirs()
+        out = store.compact(target_rows, months)
+        # a month is re-accounted when it was compacted or its dir moved
+        # (a whole-table snapshot rewrite re-versions every month)
+        after = store.month_dirs()
+        moved = {m for m, d in after.items() if before.get(m) != d}
+        if out or moved:
+            self._append_partition_rows(
+                stage, "COMPACT", months=sorted(set(out) | moved)
             )
-            return sum(
-                1
-                for _root, _dirs, files in os.walk(vdir)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
-        want = (
-            sorted(mapping)
-            if months is None
-            else [m for m in months if m in mapping]
-        )
-        before = {m: n_files(m, mapping) for m in want}
-        frag = [m for m in want if before[m] >= 2]
-        if not frag:
-            return {}
-        if months is None:
-            store.rewrite()
-        else:
-            # manifest-pruned read: only the fragmented months' dirs list
-            cur = store.read(months=frag)
-            # layout-only read-modify-write: pin the versions the copy was
-            # read from so a concurrent merge/refresh into a fragmented
-            # month raises CommitConflict instead of being overwritten
-            # with the pre-merge copy (rewrite() self-validates the same
-            # way on the whole-table path)
-            store.refresh_months(
-                cur, frag, extra={"reason": "compact"},
-                expect_versions={m: mapping[m] for m in frag},
-            )
-        self._append_partition_rows_snap(
-            stage, store, "COMPACT", months=None if months is None else frag
-        )
-        after_map = store.months()
-        return {
-            m: {
-                "files_before": before[m],
-                "files_after": n_files(m, after_map),
-                "groups": 1,
-            }
-            for m in frag
-        }
+        return out
 
     def vacuum(self) -> list[str]:
         """Remove orphans left by CRASHED runs — the parquet-dir analog of

@@ -15,7 +15,11 @@ commit, and old versions die only when explicitly expired.
 - layout ``<base>/data/p_month=YYYY-MM/v=<version>/part-*.parquet``:
   every commit writes NEW ``v=`` dirs in ``append`` mode and never touches
   an existing file, so concurrent readers of older snapshots are never
-  torn (the Iceberg write path: new data files + manifest swap);
+  torn (the Iceberg write path: new data files + manifest swap).  Version
+  names start with a letter so Spark's partition type inference never
+  reads one as a number (hex-only names such as ``548e93055109`` parse as
+  a decimal with a huge exponent and hang the read); this module is the
+  only place that builds version-dir paths (:meth:`_version_dir`);
 - ``<base>/snapshots.jsonl`` is the catalog: one row per commit holding
   the COMPLETE month->version mapping of that snapshot (months absent =
   deleted).  A crash between data write and log append leaves an orphan
@@ -67,7 +71,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from rtsa_spark.storage import cluster_for_publish
+from rtsa_spark.storage import P_MONTH, cluster_for_publish, parquet_stats
 
 __all__ = ["CommitConflict", "SnapshotStore"]
 
@@ -78,7 +82,6 @@ class CommitConflict(RuntimeError):
     validation on read-modify-write ops like :meth:`SnapshotStore.merge`).
     Re-run the operation against the new head."""
 
-P_MONTH = "p_month"
 V_COL = "v"
 #: commit ops that carry a month->version mapping (data commits); an
 #: "expire" row changes no mapping and never counts toward retention.
@@ -110,6 +113,11 @@ class SnapshotStore:
     @property
     def _data_dir(self) -> str:
         return os.path.join(self.base, "data")
+
+    def _version_dir(self, month: str, version: str) -> str:
+        return os.path.join(
+            self._data_dir, f"{P_MONTH}={month}", f"{V_COL}={version}"
+        )
 
     @property
     def _log_path(self) -> str:
@@ -259,7 +267,8 @@ class SnapshotStore:
         ``(version, months_written)``.  One job: the distinct-months
         accounting rides the write via a post-write listing of the version's
         own dirs (no second scan of the input)."""
-        ver = uuid.uuid4().hex[:12]
+        # the leading letter keeps the name non-numeric (module docstring)
+        ver = "r" + uuid.uuid4().hex[:12]
         with_cols = df.withColumn(
             P_MONTH, F.date_format(F.col(self.ts_col), "yyyy-MM")
         ).withColumn(V_COL, F.lit(ver))
@@ -275,7 +284,7 @@ class SnapshotStore:
             d.split("=", 1)[1]
             for d in os.listdir(self._data_dir)
             if d.startswith(f"{P_MONTH}=")
-            and os.path.isdir(os.path.join(self._data_dir, d, f"{V_COL}={ver}"))
+            and os.path.isdir(self._version_dir(d.split("=", 1)[1], ver))
         )
         if "__HIVE_DEFAULT_PARTITION__" in months:
             # rows with a null ts_col land in Hive's default partition —
@@ -429,6 +438,55 @@ class SnapshotStore:
             return {m: ver for m in months}, {}
 
         return self._commit("rewrite", prep, extra={"schema_id": schema_id})
+
+    def compact(
+        self, target_rows: int | None = None, months: list[str] | None = None
+    ) -> dict[str, dict]:
+        """Small-file compaction through the snapshot log (version dirs
+        are immutable, so nothing is touched in place): whole-table ->
+        :meth:`rewrite` (every month lands on ONE fresh clustered
+        version); ``months`` -> a layout-only :meth:`refresh_months`
+        re-publishing the CURRENT content of just the fragmented requested
+        months (other months keep their versions).  Content is
+        bit-identical either way, time travel stays intact and
+        :meth:`expire` later reclaims the fragmented versions.  The
+        trigger is >=2 parquet files in a month's current version dir
+        (``target_rows`` is accepted for parity with
+        :meth:`rtsa_spark.storage.PlainStore.compact` and ignored: a
+        rewrite always re-clusters the whole month), so re-running is a
+        no-op with no empty commits.  Returns ``{month: {"files_before",
+        "files_after", "groups"}}`` for the months that changed."""
+        mapping = self.months()
+        want = sorted(mapping) if months is None else [
+            m for m in months if m in mapping
+        ]
+        before = {
+            m: parquet_stats(self._version_dir(m, mapping[m]))[1] for m in want
+        }
+        frag = [m for m in want if before[m] >= 2]
+        if not frag:
+            return {}
+        if months is None:
+            self.rewrite()
+        else:
+            # layout-only read-modify-write: pin the versions the copy was
+            # read from so a concurrent merge/refresh into a fragmented
+            # month raises CommitConflict instead of being overwritten
+            # with the pre-merge copy (rewrite() self-validates the same
+            # way on the whole-table path)
+            self.refresh_months(
+                self.read(months=frag), frag, extra={"reason": "compact"},
+                expect_versions={m: mapping[m] for m in frag},
+            )
+        after = self.month_dirs()
+        return {
+            m: {
+                "files_before": before[m],
+                "files_after": parquet_stats(after[m])[1],
+                "groups": 1,
+            }
+            for m in frag
+        }
 
     def data_commits(self, branch: str | None = None) -> list[dict]:
         """Data-commit rows (publish/refresh/rollback/rewrite/
@@ -883,6 +941,17 @@ class SnapshotStore:
             self._snapshot_row(asof if asof is not None else cur)["months"]
         )
 
+    def month_dirs(self) -> dict[str, str]:
+        """``{month: version dir}`` of the current snapshot (``{}`` before
+        the first commit) — the stage-table listing shared with
+        :class:`rtsa_spark.storage.PlainStore`, for callers that account
+        files per partition."""
+        if self.current_snapshot() is None:
+            return {}
+        return {
+            m: self._version_dir(m, v) for m, v in sorted(self.months().items())
+        }
+
     def refs(self) -> DataFrame:
         """Metadata view of every live ref (Iceberg ``table.refs``):
         ``(name, type, snapshot_id)`` with main included as a branch."""
@@ -900,7 +969,7 @@ class SnapshotStore:
         in the snapshot); driver-side, as metadata tables are."""
         rows = []
         for m, v in sorted(self.months(asof=asof).items()):
-            vdir = os.path.join(self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={v}")
+            vdir = self._version_dir(m, v)
             for fn in sorted(os.listdir(vdir)):
                 fp = os.path.join(vdir, fn)
                 if fn.endswith(".parquet") and os.path.isfile(fp):
@@ -948,10 +1017,7 @@ class SnapshotStore:
             mapping = {m: v for m, v in mapping.items() if m <= month_hi}
         if not mapping:
             return self.spark.createDataFrame([], schema)
-        dirs = [
-            os.path.join(self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={v}")
-            for m, v in sorted(mapping.items())
-        ]
+        dirs = [self._version_dir(m, v) for m, v in sorted(mapping.items())]
         return (
             self.spark.read.schema(schema)
             .option("basePath", self._data_dir)
@@ -1010,12 +1076,7 @@ class SnapshotStore:
         def _subset(mapping: dict[str, str], months_: list[str]) -> DataFrame:
             if not months_:
                 return self.spark.createDataFrame([], schema).select(cols)
-            dirs = [
-                os.path.join(
-                    self._data_dir, f"{P_MONTH}={m}", f"{V_COL}={mapping[m]}"
-                )
-                for m in months_
-            ]
+            dirs = [self._version_dir(m, mapping[m]) for m in months_]
             return (
                 self.spark.read.schema(schema)
                 .option("basePath", self._data_dir)

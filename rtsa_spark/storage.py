@@ -37,6 +37,12 @@ Operational contract:
   near-sorted pass, and parquet min/max row-group pruning on time
   ranges gets tight for free.
 
+The module also holds the publish-side layout shared by every
+month-partitioned stage: :func:`cluster_for_publish`, footer-based
+:func:`parquet_stats`, and :class:`PlainStore`, the plain ``p_month=``
+stage table (the snapshot-backed one is
+:class:`rtsa_spark.snapshot.SnapshotStore`).
+
 Verification: tests/test_storage.py writes two co-bucketed tiers and
 asserts (a) read-back content equality, (b) the source-keyed join plan
 contains no shuffle Exchange, (c) ``groupBy(source)`` aggregation plans
@@ -46,6 +52,9 @@ assertion as audit #16.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,12 +63,15 @@ __all__ = [
     "read_bucketed",
     "bucket_spec",
     "cluster_for_publish",
+    "parquet_stats",
+    "PlainStore",
     "zorder_key",
     "cluster_zorder",
     "zorder_skip_audit",
 ]
 
 DEFAULT_BUCKETS = 64
+P_MONTH = "p_month"
 
 
 def cluster_for_publish(
@@ -94,6 +106,234 @@ def cluster_for_publish(
     return df.repartitionByRange(*[F.col(c) for c in cols]).sortWithinPartitions(
         *cols
     )
+
+
+def parquet_stats(path: str | None) -> tuple[int, int, int]:
+    """``(rows, files, bytes)`` of the parquet data files under ``path``
+    (recursive; zeros for ``None`` or a missing dir).  Row counts come
+    from the file footers — driver-side metadata, no Spark job: the
+    per-data-file ``record_count`` an Iceberg manifest keeps."""
+    import pyarrow.parquet as pq
+
+    rows = n_files = n_bytes = 0
+    if path is None:
+        return rows, n_files, n_bytes
+    for root, _dirs, files in os.walk(path):
+        for fname in files:
+            if fname.endswith(".parquet"):
+                fp = os.path.join(root, fname)
+                rows += pq.read_metadata(fp).num_rows
+                n_files += 1
+                n_bytes += os.path.getsize(fp)
+    return rows, n_files, n_bytes
+
+
+def _local_path(uri: str) -> str:
+    """``input_file_name()`` yields URIs (``file:///x``, sometimes
+    ``file:/x``) where ``os.walk`` yields plain paths.  A mismatch would
+    treat a grouped file as untouched AND rewrite it — duplicated rows —
+    so parse, never strip a fixed prefix."""
+    from urllib.parse import unquote, urlparse
+
+    parsed = urlparse(uri)
+    return unquote(parsed.path) if parsed.scheme else uri
+
+
+class PlainStore:
+    """Month-partitioned parquet dir holding only the CURRENT state — the
+    plain counterpart of :class:`rtsa_spark.snapshot.SnapshotStore`, with
+    the same stage-table verbs (``publish``, ``refresh_months``,
+    month-pruned ``read``, ``month_dirs`` listing, ``compact``), so
+    ``TierPipeline`` runs one code path over either layout.
+
+    Layout ``<base>/p_month=YYYY-MM/part-*.parquet`` for frames carrying
+    ``ts_col``, else one unpartitioned dir.  A publish writes
+    ``<base>._tmp_<run_id>`` and swaps it in by rename, so a killed write
+    never leaves a half-table behind; a refresh overwrites only the
+    requested month dirs (dynamic partition overwrite — the parquet
+    emulation of Iceberg ``overwritePartitions``).  Overwrites are
+    destructive: a plain dir keeps no history to time-travel to.
+    """
+
+    def __init__(
+        self, spark: SparkSession, base_dir: str, ts_col: str, run_id: str
+    ):
+        self.spark = spark
+        self.base = base_dir
+        self.ts_col = ts_col
+        self.run_id = run_id
+
+    def current_snapshot(self) -> None:
+        """A plain dir keeps no snapshot history."""
+        return None
+
+    def month_dirs(self) -> dict[str | None, str]:
+        """``{month: dir}`` of the published partitions; an unpartitioned
+        stage lists as ``{None: base}``, an unpublished one as ``{}``."""
+        if not os.path.isdir(self.base):
+            return {}
+        dirs = {
+            d.split("=", 1)[1]: os.path.join(self.base, d)
+            for d in sorted(os.listdir(self.base))
+            # dotted names are crash debris of a compaction swap
+            if d.startswith(f"{P_MONTH}=") and "._" not in d
+        }
+        return dirs or {None: self.base}
+
+    def read(
+        self,
+        months: list[str] | None = None,
+        month_lo: str | None = None,
+        month_hi: str | None = None,
+    ) -> DataFrame:
+        """Current table, partition-pruned on ``p_month`` (``months`` or
+        an INCLUSIVE ``YYYY-MM`` range); the partition column is dropped.
+        Unpartitioned stages ignore the month arguments."""
+        df = self.spark.read.parquet(self.base)
+        if P_MONTH not in df.columns:
+            return df
+        if months is not None:
+            df = df.where(F.col(P_MONTH).isin(list(months)))
+        if month_lo is not None:
+            df = df.where(F.col(P_MONTH) >= month_lo)
+        if month_hi is not None:
+            df = df.where(F.col(P_MONTH) <= month_hi)
+        return df.drop(P_MONTH)
+
+    def _with_month(self, df: DataFrame) -> DataFrame:
+        return df.withColumn(P_MONTH, F.date_format(F.col(self.ts_col), "yyyy-MM"))
+
+    def publish(self, df: DataFrame) -> None:
+        """Full-table publish: tmp write + atomic rename over the old dir."""
+        tmp = f"{self.base}._tmp_{self.run_id}"
+        writer = df.write.mode("overwrite")
+        if self.ts_col in df.columns:
+            writer = (
+                cluster_for_publish(self._with_month(df), ("source", self.ts_col))
+                .write.mode("overwrite")
+                .partitionBy(P_MONTH)
+            )
+        writer.parquet(tmp)
+        if os.path.exists(self.base):
+            shutil.rmtree(self.base)
+        os.rename(tmp, self.base)
+
+    def refresh_months(self, df: DataFrame, months: list[str]) -> None:
+        """Dynamic partition overwrite of ``months`` from ``df``
+        (defensively filtered to them, so a recomputed frame never
+        overwrites a neighbor month with partial content), PLUS removal
+        of any requested month ``df`` has no rows for — dynamic mode only
+        touches partitions present in the frame, so a fully-deleted month
+        would otherwise survive as a stale dir forever."""
+        with_m = self._with_month(df).where(F.col(P_MONTH).isin(months))
+        written = {r[P_MONTH] for r in with_m.select(P_MONTH).distinct().collect()}
+        existing = {m for m in self.month_dirs() if m is not None}
+        if not written and not (existing - set(months)):
+            # deleting every month dir and writing nothing back leaves a
+            # stage with zero partitions — unreadable (no schema) and
+            # certainly an upstream accident
+            raise ValueError(
+                f"refresh of {sorted(months)} would empty {self.base} "
+                f"entirely; remove the base dir explicitly to tear the "
+                f"table down"
+            )
+        (
+            cluster_for_publish(with_m, ("source", self.ts_col))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(P_MONTH)
+            .parquet(self.base)
+        )
+        for m in set(months) - written:
+            stale = os.path.join(self.base, f"{P_MONTH}={m}")
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
+
+    def compact(
+        self, target_rows: int, months: list[str] | None = None
+    ) -> dict[str, dict]:
+        """Small-file compaction per month dir: sub-``target_rows`` files
+        are grouped by :func:`operators.retention.plan_compaction`, each
+        group with >=2 files is rewritten as ONE file re-sorted on
+        ``(source, ts_col)``, untouched files are hard-linked, and the
+        month dir is swapped by two renames (``._compact_<run>`` build,
+        ``._old_<run>`` aside — the markers ``TierPipeline.vacuum``
+        reaps or heals after a crash).  Single-file groups are skipped,
+        so re-running is a no-op.  Returns ``{month: {"files_before",
+        "files_after", "groups"}}`` for the months that changed."""
+        from rtsa_spark.operators.retention import file_stats, plan_compaction
+
+        dirs = self.month_dirs()
+        if not dirs or None in dirs:
+            raise ValueError(
+                f"{self.base} is not month-partitioned; compaction "
+                f"operates per partition"
+            )
+        out: dict[str, dict] = {}
+        for m, mpath in dirs.items():
+            if months is not None and m not in months:
+                continue
+            df = self.spark.read.parquet(mpath)
+            if self.ts_col not in df.columns:
+                raise ValueError(f"{self.base} has no time column")
+            plan = plan_compaction(file_stats(df, self.ts_col), target_rows)
+            groups: dict[int, list[str]] = {}
+            for r in plan.collect():  # file-count sized, never data
+                groups.setdefault(r["group"], []).append(r["file"])
+            # rewriting a lone small file gains nothing and would make
+            # compaction re-trigger forever; >=2-file groups only
+            groups = {g: fs for g, fs in groups.items() if len(fs) >= 2}
+            if not groups:
+                continue
+            grouped_files = {_local_path(f) for fs in groups.values() for f in fs}
+            n_grouped = sum(len(fs) for fs in groups.values())
+            if len(grouped_files) != n_grouped or not all(
+                os.path.exists(f) for f in grouped_files
+            ):
+                raise RuntimeError(
+                    f"file-URI normalization mismatch in {mpath}: plan "
+                    f"names {n_grouped} files, {len(grouped_files)} "
+                    f"resolved locally — refusing to compact"
+                )
+            tmp = mpath + f"._compact_{self.run_id}"
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.makedirs(tmp)
+            files_before = parquet_stats(mpath)[1]
+            for root, _dirs, files in os.walk(mpath):
+                for fname in files:
+                    src = os.path.join(root, fname)
+                    if fname.endswith(".parquet") and src not in grouped_files:
+                        os.link(src, os.path.join(tmp, fname))
+            for g, fs in sorted(groups.items()):
+                gtmp = tmp + f".g{g}"
+                (
+                    self.spark.read.parquet(*fs)
+                    .coalesce(1)
+                    .sortWithinPartitions(
+                        *[c for c in ("source", self.ts_col) if c in df.columns]
+                    )
+                    .write.mode("overwrite")
+                    .parquet(gtmp)
+                )
+                parts = [f for f in os.listdir(gtmp) if f.endswith(".parquet")]
+                for i, f in enumerate(parts):
+                    os.rename(
+                        os.path.join(gtmp, f),
+                        os.path.join(
+                            tmp, f"compacted-g{g}-{i}-{self.run_id}.parquet"
+                        ),
+                    )
+                shutil.rmtree(gtmp)
+            old = mpath + f"._old_{self.run_id}"
+            os.rename(mpath, old)
+            os.rename(tmp, mpath)
+            shutil.rmtree(old)
+            out[m] = {
+                "files_before": files_before,
+                "files_after": parquet_stats(mpath)[1],
+                "groups": len(groups),
+            }
+        return out
 
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from rtsa_spark.operators.rollup import TIER_ORDER
 from rtsa_spark.pipeline import TierPipeline
 from rtsa_spark.synth import synth_sequences
 
@@ -40,6 +41,25 @@ def _totals(df):
     }
 
 
+def _assert_layout_parity(plain, snap, stages):
+    """Same manifest row count per (stage, p_month) and same contents for
+    every stage, whichever layout stores it."""
+    def status(p):
+        return {
+            (r["stage"], r["p_month"]): r["rows"]
+            for r in p.table_status().collect()
+        }
+
+    assert status(plain) == status(snap)
+    assert set(stages) <= {s for s, _m in status(plain)}
+    for stage in stages:
+        a, b = plain.read_stage(stage), snap.read_stage(stage)
+        assert sorted(a.columns) == sorted(b.columns), stage
+        b = b.select(*a.columns)
+        assert a.exceptAll(b).count() == 0, stage
+        assert b.exceptAll(a).count() == 0, stage
+
+
 def test_run_matches_plain_layout_and_resumes(spark, seqs, tmp_path):
     snap = _mk(spark, str(tmp_path / "snap"))
     snap.run(seqs)
@@ -48,14 +68,60 @@ def test_run_matches_plain_layout_and_resumes(spark, seqs, tmp_path):
         tiers=["raw", "hourly", "daily", "monthly"],
         gapfill_tiers=(), metrics_tiers=(),
     )
-    plain.run(seqs)
-    assert _totals(snap.read_stage("rollup_hourly")) == _totals(
-        plain.read_stage("rollup_hourly")
-    )
+    stages = plain.run(seqs)
+    _assert_layout_parity(plain, snap, stages)
     # resume: a second run() over identical input appends no ledger rows
     n1 = len(snap._ledger())
     _mk(spark, str(tmp_path / "snap")).run(seqs)
     assert len(snap._ledger()) == n1
+
+    # every tier snapshot-backed, with the derived stages on: the same
+    # tables as the plain layout, after the build and after a one-month
+    # refresh
+    def full(name, snapshot_tiers):
+        return TierPipeline(
+            spark, str(tmp_path / name),
+            gapfill_tiers=("hourly", "daily"), metrics_tiers=("daily",),
+            encode_tiers=("hourly",), snapshot_tiers=snapshot_tiers,
+        )
+
+    plain, snap = full("plain_all", ()), full("snap_all", TIER_ORDER)
+    stages = plain.run(seqs)
+    snap.run(seqs)
+    assert snap._is_snapshot_stage("encoded_hourly")
+    _assert_layout_parity(plain, snap, stages)
+    feb = F.date_format(F.col("ts"), "yyyy-MM") == "2024-02"
+    corrected = seqs.withColumn(
+        "n_tok", F.when(feb, F.col("n_tok") * 2).otherwise(F.col("n_tok"))
+    )
+    for p in (plain, snap):
+        p.refresh_months(corrected, ["2024-02"])
+    _assert_layout_parity(plain, snap, stages)
+
+
+@pytest.mark.parametrize("snapshot_tiers", [(), ("hourly",)])
+def test_encoded_refresh_rows_out_is_month_scoped(
+    spark, seqs, tmp_path, snapshot_tiers
+):
+    """The encoded stage's REFRESH ledger row counts the refreshed month
+    only — the same figure as that month's REFRESH manifest rows."""
+    p = TierPipeline(
+        spark, str(tmp_path / "enc"), tiers=["raw", "hourly"],
+        gapfill_tiers=(), metrics_tiers=(), encode_tiers=("hourly",),
+        snapshot_tiers=snapshot_tiers,
+    )
+    p.run(seqs)
+    p.refresh_months(seqs.withColumn("n_tok", F.col("n_tok") + 1), ["2024-02"])
+    refresh = p.lineage().where(
+        (F.col("stage") == "encoded_hourly") & (F.col("status") == "REFRESH")
+    ).collect()
+    manifest = p.partition_lineage().where(
+        (F.col("stage") == "encoded_hourly") & (F.col("status") == "REFRESH")
+    ).collect()
+    assert len(refresh) == 1
+    assert {r["p_month"] for r in manifest} == {"2024-02"}
+    assert refresh[0]["rows_out"] == sum(r["rows"] for r in manifest) > 0
+    assert refresh[0]["rows_out"] < p.read_stage("encoded_hourly").count()
 
 
 def test_refresh_time_travels_and_downstream_cascades(spark, seqs, tmp_path):

@@ -43,6 +43,39 @@ def test_publish_read_roundtrip(spark, tier, tmp_path):
     assert _totals(got) == _totals(tier)
 
 
+def test_version_names_never_parse_as_numbers(spark, tier, tmp_path):
+    """Every data-writing commit (publish, refresh_months, merge, rewrite)
+    names its version dirs ``v=r<12 hex>``: with Spark's partition type
+    inference on, an all-hex name like ``v=548e93055109`` parses as a
+    decimal with a huge exponent and the read hangs."""
+    import re
+
+    base = str(tmp_path / "st")
+    st = SnapshotStore(spark, base)
+    st.publish(tier)
+    feb = F.date_format(F.col("bucket_start"), "yyyy-MM") == "2024-02"
+    st.refresh_months(tier.where(feb), ["2024-02"])
+    st.merge(tier.where(feb), keys=["source", "bucket_start"])
+    st.rewrite()
+    names = {
+        d
+        for _root, dirs, _files in os.walk(os.path.join(base, "data"))
+        for d in dirs
+        if d.startswith("v=")
+    }
+    assert len(names) == 4  # one fresh version per commit
+    assert all(re.fullmatch(r"v=r[0-9a-f]{12}", d) for d in names), names
+    # type inference on: the version partition column reads as a string
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        inferred = dict(spark.read.parquet(os.path.join(base, "data")).dtypes)
+    finally:
+        spark.conf.set(key, prev)
+    assert inferred["v"] == "string"
+
+
 def test_refresh_time_travel(spark, tier, tmp_path):
     st = SnapshotStore(spark, str(tmp_path / "st"))
     st.publish(tier)
